@@ -1,8 +1,7 @@
 package graft.etl
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** The reference's single checkpoint document, stored in SSM Parameter
   * Store as a JSON SecureString (reference: README.md:32-45 seed shape;
@@ -31,13 +30,32 @@ final case class CheckpointState(
 }
 
 object CheckpointState {
+
+  /** Parses a present checkpoint document. Every field of the document
+    * shape above is required: a torn write (empty file, `{}`, truncated
+    * JSON) must fail the run, never read as serial 0 and restart the
+    * numbering over an earlier export. Only an ABSENT document is the
+    * [[seed]], which the stores decide.
+    */
   def fromJson(s: String): CheckpointState = {
     val n = new ObjectMapper().readTree(s)
+    def field(obj: String, name: String): JsonNode = {
+      val v = Option(n).map(_.path(obj).path(name)).filter(_.isValueNode)
+      require(v.exists(!_.isNull),
+        s"torn checkpoint: missing $obj.$name in ${s.take(200)}")
+      v.get
+    }
+    def serial(obj: String): Long = {
+      val v = field(obj, "serialNumber")
+      require(v.canConvertToExactIntegral,
+        s"torn checkpoint: $obj.serialNumber is not an integer: $v")
+      v.asLong()
+    }
     CheckpointState(
-      lastRunTime = n.path("data").path("lastRunTime").asText(""),
-      dataSerial = n.path("data").path("serialNumber").asLong(0L),
-      schemaSerial = n.path("schema").path("serialNumber").asLong(0L),
-      lastMD5Hash = n.path("schema").path("lastMD5Hash").asText(""))
+      lastRunTime = field("data", "lastRunTime").asText(),
+      dataSerial = serial("data"),
+      schemaSerial = serial("schema"),
+      lastMD5Hash = field("schema", "lastMD5Hash").asText())
   }
 
   /** Fresh seed — serials at 0, epoch watermark (everything exports). */
@@ -59,10 +77,19 @@ final class FileCheckpointStore(path: Path) extends CheckpointStore {
     if (Files.exists(path)) CheckpointState.fromJson(Files.readString(path))
     else CheckpointState.seed
 
+  /** Writes a dot-prefixed temp file beside the checkpoint, then renames
+    * it over the checkpoint atomically: a reader sees the old document or
+    * the new one, never a truncated one. A crash before the rename leaves
+    * the temp file, which [[read]] ignores.
+    */
   override def write(st: CheckpointState): Unit = {
-    Files.createDirectories(path.toAbsolutePath.getParent)
-    Files.writeString(path, st.toJson,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    val dir = path.toAbsolutePath.getParent
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, s".${path.getFileName}.", ".tmp")
+    try {
+      Files.writeString(tmp, st.toJson)
+      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE): Unit
+    } finally Files.deleteIfExists(tmp): Unit
   }
 }
 

@@ -53,8 +53,11 @@ object Coercions {
     * else native.
     */
   def coerceForJson(df: DataFrame, uuidCols: Set[String] = Set.empty)
-      : DataFrame = {
-    val cols = df.schema.fields.map { f =>
+      : DataFrame =
+    df.select(coerced(df, uuidCols): _*)
+
+  private def coerced(df: DataFrame, uuidCols: Set[String]): Seq[Column] =
+    df.schema.fields.toSeq.map { f =>
       val c = col(f.name)
       val coerced = f.dataType match {
         case _ if uuidCols.contains(f.name) => uuidHex(c)
@@ -65,17 +68,19 @@ object Coercions {
       }
       coerced.as(f.name)
     }
-    df.select(cols.toSeq: _*)
-  }
 
   /** Row → JSON object string, field order = column order (the reference
     * zips catalog column order into a dict and orjson preserves insertion
     * order; src/db_extractor_full.py:169-170). orjson emits explicit
     * `"col": null` for NULL values, so Spark's default null-dropping
     * (spark.sql.jsonGenerator.ignoreNullFields=true) must be overridden.
+    * A column, so a sink can project it beside other columns of `df`.
     */
+  def jsonColumn(df: DataFrame, uuidCols: Set[String] = Set.empty): Column =
+    to_json(struct(coerced(df, uuidCols): _*),
+      Map("ignoreNullFields" -> "false"))
+
+  /** `df` as one [[jsonColumn]] named `json`. */
   def jsonRow(df: DataFrame, uuidCols: Set[String] = Set.empty): DataFrame =
-    coerceForJson(df, uuidCols)
-      .select(to_json(struct(col("*")),
-        Map("ignoreNullFields" -> "false")).as("json"))
+    df.select(jsonColumn(df, uuidCols).as("json"))
 }

@@ -2,17 +2,24 @@ package graft.etl
 
 import java.nio.file.Path
 
-/** Completion strategy for [[JsonArraySink]]: how the ordered staged
-  * parts become ONE object — the final step of the reference's
-  * multipart upload (db_extractor_full.py:289-296, a single
-  * `complete_multipart_upload` over the sorted part list).
+/** Completion strategy for [[JsonArraySink]]: how the staged parts
+  * become ONE object — the final step of the reference's multipart
+  * upload (db_extractor_full.py:289-296, a single
+  * `complete_multipart_upload` over the sorted part list). Either way
+  * the parts come from one `foreachPartition` job whose tasks write and
+  * rename their own part files; no Hadoop commit runs.
   *
   * Two strategies, because the two filesystems genuinely differ:
   *
   *  - [[Composer.LocalByteSplice]] (default): on a local FS there is
   *    no part-list API, so the driver streams the staged row lines
-  *    once and writes the `[ , ]` framing itself. Output bytes are
-  *    the reference's exact object shape (golden-tested).
+  *    once and writes the `[ , ]` framing itself. Since every byte
+  *    passes through the driver anyway, this is also where an ordered
+  *    table gets its order: each part is a run its task sorted, staged
+  *    as `<key>\t<json>` lines with a byte-ordered key, and completion
+  *    k-way merges the runs on (key, part index) — no range exchange,
+  *    no second scan to sample the range bounds. Output bytes are the
+  *    reference's exact object shape (golden-tested).
   *
   *  - [[Composer.PartList]]: on an object store, re-copying every
   *    byte through the driver to add framing would defeat the
@@ -24,7 +31,9 @@ import java.nio.file.Path
   *    part list is: literal `[`, the non-empty fragments in
   *    partition order — the FIRST with `skipLeadingByte` (its
   *    framing comma must not follow `[`) — and literal `]`. No
-  *    fragment byte moves through the driver.
+  *    fragment byte moves through the driver, so nothing there can
+  *    merge runs: an ordered table keeps Spark's global `orderBy`,
+  *    whose range partitions concatenate in order.
   *
   * The real object-store binding for [[PartStore]] (absent in this
   * offline sandbox — the documented-stub boundary of SURVEY.md §7.4,

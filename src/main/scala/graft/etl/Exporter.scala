@@ -18,6 +18,15 @@ package graft.etl
   *    default; `advanceOnPartialFailure = true` restores the reference
   *    behavior.
   *
+  * Per table, [[Watermark]] filters and names the order column, and the
+  * sink delivers that order. The JSON-array sink costs one Spark job per
+  * table: its tasks sort their own partitions and stage them as part
+  * files, and the driver k-way merges the sorted runs while it writes the
+  * one array ([[JsonArraySink]]). The Parquet sink keeps a global
+  * `orderBy` before its write: its shards are the output, read directly
+  * by downstream consumers, so the order must be in the files
+  * themselves and no driver step exists to merge it.
+  *
   * Scale: table-level fan-out is the reference's (accidentally serial)
   * process-per-table loop (db_extractor_full.py:508-537). Here each
   * table's scan/encode already parallelizes across executors, and tables
@@ -146,14 +155,15 @@ object Exporter {
           Watermark(source.read(orig), st.lastRunTime) match {
             case None =>
               Skipped(t, "updated_at-only table (reference semantics)")
-            case Some(df) => sink match {
+            case Some((df, order)) => sink match {
               case JsonArray =>
                 val path = s"$prefix/$t.json"
-                JsonArraySink.write(df, path, uuidCols)
+                JsonArraySink.write(df, path, uuidCols, orderBy = order)
                 Exported(t, path)
               case Parquet =>
                 val path = s"$prefix/$t.parquet"
-                df.write.mode("overwrite").parquet(path)
+                order.fold(df)(df.orderBy(_))
+                  .write.mode("overwrite").parquet(path)
                 Exported(t, path)
             }
           }

@@ -20,7 +20,10 @@ trait TableSource {
 
   /** Full scan as a DataFrame; Catalyst pushes watermark predicates into
     * the scan (reference S4-S6 build WHERE clauses by hand; here pushdown
-    * is free and visible in the plan's PushedFilters).
+    * is free and visible in the plan's PushedFilters). Pushed is not
+    * pruned: a Parquet source skips row groups on a TIMESTAMP (LTZ)
+    * watermark but reads every row group on a TIMESTAMP_NTZ one
+    * (Spark 4.1), so the filter then runs row by row after the scan.
     */
   def read(table: String): DataFrame
 

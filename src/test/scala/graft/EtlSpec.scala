@@ -93,6 +93,7 @@ class EtlSpec extends SparkSpec {
     val st = CheckpointState("2024-05-06 07:08:09.123456", 7L, 3L, "abc123")
     val rt = CheckpointState.fromJson(st.toJson)
     assert(rt == st)
-    assert(CheckpointState.fromJson("{}") == CheckpointState("", 0, 0, ""))
+    // a present document missing its fields is torn, not the seed
+    intercept[IllegalArgumentException](CheckpointState.fromJson("{}"))
   }
 }

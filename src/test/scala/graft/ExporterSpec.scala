@@ -252,6 +252,153 @@ class ExporterSpec extends SparkSpec {
       "part-99999-b.txt", "part-100000-c.txt", "part-100001-x.txt"))
   }
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The elements of a JSON-array file, parsed (either composer). */
+  private def elements(p: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+    import scala.jdk.CollectionConverters._
+    mapper.readTree(Files.readString(Paths.get(p))).elements().asScala.toSeq
+  }
+
+  test("ordered merge: sorted runs emit orderBy(created_at) order for " +
+    "every key type; uncovered types take the global sort") {
+    val rnd = new scala.util.Random(11)
+    val base = java.time.LocalDateTime.of(1969, 12, 31, 23, 59, 59)
+    // values from a small domain, so created_at ties are common
+    val types: Seq[(DataType, Int => Any)] = Seq(
+      TimestampType -> ((i: Int) => java.sql.Timestamp.valueOf(
+        base.plusNanos(i * 987654321000L))),
+      // pre-epoch, micros, and wall times a US time zone skips or repeats
+      TimestampNTZType -> ((i: Int) => ts(Seq("1969-12-31T23:59:59.999999",
+        "1970-01-01T00:00:00", "1900-01-01T00:00:00.5", "2024-03-10T01:59:59",
+        "2024-03-10T02:30:00", "2024-03-10T03:15:00", "2024-03-10T03:00:00.000001",
+        "2024-11-03T01:30:00", "2024-11-03T01:15:00",
+        "9999-12-31T23:59:59.999999")(i))),
+      DateType -> ((i: Int) => java.sql.Date.valueOf(
+        java.time.LocalDate.of(1969, 12, 31).plusDays(i * 400L))),
+      LongType -> ((i: Int) => Seq(Long.MinValue, -5000000000L, -256L, -1L, 0L, 1L,
+        255L, 256L, 5000000000L, Long.MaxValue)(i)),
+      // UTF-8 byte order, which Spark sorts by, is not UTF-16 order:
+      // the emoji (4 UTF-8 bytes, a surrogate pair) sorts after U+FF21
+      StringType -> ((i: Int) => Seq("", "a", "ab", "Z", "é", "É", "日本",
+        "\uFF21", "\uD83D\uDE00", "zz")(i)),
+      DecimalType(12, 2) -> ((i: Int) => new java.math.BigDecimal(
+        Seq("-1000.50", "-1.00", "0.00", "0.01", "7.25", "99.99", "100.00",
+          "3.14", "-0.01", "12345.67")(i))))
+    val out = tmpDir("merge")
+    // a session zone with DST: no key may read the wall clock through it
+    val prevZone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try types.foreach { case (t, value) =>
+      // 6 partitions: two empty, one holding most rows; null created_at
+      // rows reach the sink only through the created-and-updated route
+      var id = 0L
+      val parts = Seq(0, 70, 3, 0, 9, 1).map(n => (0 until n).map { _ =>
+        id += 1
+        Row(id, if (rnd.nextInt(8) == 0) null else value(rnd.nextInt(10)),
+          ts("2024-06-01T00:00:00"))
+      })
+      val src = spark.createDataFrame(
+        spark.sparkContext.parallelize(parts, parts.size).flatMap(identity),
+        StructType(Seq(StructField("id", LongType),
+          StructField("created_at", t), StructField("updated_at",
+            TimestampNTZType))))
+      val (df, order) = t match {
+        case TimestampType | TimestampNTZType =>
+          Watermark(src, "1960-01-01 00:00:00").get
+        case _ => (src, Some("created_at"))
+      }
+      assert(order == Some("created_at"))
+      assert(df.rdd.getNumPartitions == 6)
+      assert(JsonArraySink.sortKey(df, "created_at").isDefined
+        == !t.isInstanceOf[DecimalType], t)
+      val want = Coercions.jsonRow(df.orderBy("created_at")).collect()
+        .map(r => mapper.readTree(r.getString(0))).toSeq
+      assert(want.length == parts.map(_.size).sum)
+      val splice = s"$out/${t.typeName}.json"
+      val listed = s"$out/${t.typeName}_parts.json"
+      JsonArraySink.write(df, splice, orderBy = order)
+      JsonArraySink.write(df, listed, orderBy = order,
+        composer = Composer.PartList(LocalConcatStore))
+      for (p <- Seq(splice, listed)) {
+        val got = elements(p)
+        assert(got.map(_.get("created_at")) == want.map(_.get("created_at")),
+          s"$t: $p")
+        assert(got.sortBy(_.get("id").asLong) == want.sortBy(_.get("id").asLong),
+          s"$t: $p")
+      }
+      // an empty result is still one array under both composers
+      val none = df.where("id < 0")
+      JsonArraySink.write(none, s"$out/none.json", orderBy = order)
+      JsonArraySink.write(none, s"$out/none_parts.json", orderBy = order,
+        composer = Composer.PartList(LocalConcatStore))
+      assert(Files.readString(Paths.get(s"$out/none.json")) == "[]")
+      assert(Files.readString(Paths.get(s"$out/none_parts.json")) == "[]")
+    } finally spark.conf.set("spark.sql.session.timeZone", prevZone)
+  }
+
+  test("a stray .part-* attempt file in the staging directory never " +
+    "reaches the output") {
+    val dir = Paths.get(tmpDir("stray"))
+    val lines = spark.range(0, 5, 1, 3).selectExpr(
+      "concat('1', lpad(hex(id), 16, '0'), '\t{\"id\":', id, '}')")
+    JsonArraySink.stage(lines, dir)
+    // what a failed or duplicate task attempt leaves before its rename
+    Files.writeString(dir.resolve(".part-00000-999"), "0\t{\"stray\":1}\n")
+    Files.writeString(dir.resolve(".part-00007-12"), "0\t{\"stray\":2}\n")
+    val parts = JsonArraySink.partFiles(dir)
+    assert(parts.map(_.getFileName.toString) ==
+      Seq("part-00000", "part-00001", "part-00002"))
+    val out = dir.resolveSibling(s"${dir.getFileName}.json")
+    JsonArraySink.compose(parts, out, keyed = true)
+    assert(Files.readString(out) ==
+      """[{"id":0},{"id":1},{"id":2},{"id":3},{"id":4}]""")
+    // staging itself leaves no attempt file behind
+    assert(dir.toFile.list().filter(_.startsWith(".")).sorted.toSeq ==
+      Seq(".part-00000-999", ".part-00007-12"))
+  }
+
+  test("torn checkpoint fails the run without exporting; a leftover " +
+    "temp file beside a valid checkpoint is ignored") {
+    val torn = Seq(
+      "",
+      "{}",
+      """{"data":{"lastRunTime":"2024-01-01 00:00:00","serialNumber":3},"sch""",
+      """{"data":{"lastRunTime":"2024-01-01 00:00:00","serialNumber":3}}""",
+      """{"data":{"serialNumber":3},"schema":{"serialNumber":1,"lastMD5Hash":""}}""")
+    torn.foreach { doc =>
+      val out = tmpDir("torn")
+      val ckpt = Paths.get(s"$out/ckpt.json")
+      Files.writeString(ckpt, doc)
+      val store = FileCheckpointStore(ckpt.toString)
+      intercept[Exception](store.read())
+      intercept[Exception](Exporter.run(fixtureSource, out, store,
+        runTime = "2024-02-15 00:00:00"))
+      assert(GraftJob.run(fixtureSource, out, store).data.isLeft, doc)
+      // nothing exported or overwritten; the torn document stays for an
+      // operator to inspect
+      assert(!Files.exists(Paths.get(s"$out/db_data")), doc)
+      assert(Files.readString(ckpt) == doc)
+    }
+
+    // a crash between writing the temp file and the rename
+    val out = tmpDir("torn_tmp")
+    val store = FileCheckpointStore(s"$out/ckpt.json")
+    val st = CheckpointState("2024-02-15 00:00:00", 4L, 2L, "abc")
+    store.write(st)
+    Files.writeString(Paths.get(s"$out/.ckpt.json.123.tmp"), """{"data":""")
+    assert(store.read() == st)
+    val r = Exporter.run(fixtureSource, out, store,
+      runTime = "2024-03-15 00:00:00")
+    assert(r.serial == 5L && store.read().dataSerial == 5L)
+    // the store's own writes leave no temp file behind
+    assert(new java.io.File(out).list().filter(_.startsWith(".")).toSeq
+      == Seq(".ckpt.json.123.tmp"))
+    // an absent checkpoint is still the seed
+    assert(FileCheckpointStore(s"$out/absent.json").read()
+      == CheckpointState.seed)
+  }
+
   test("parquet sink mode: sharded columnar output, same routing") {
     val out = tmpDir("pq")
     val store = FileCheckpointStore(s"$out/ckpt.json")

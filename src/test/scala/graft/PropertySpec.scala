@@ -105,7 +105,7 @@ class PropertySpec extends AnyFunSuite {
           StructField("updated_at", TimestampNTZType))))
       val wmDay = 1 + rnd.nextInt(28)
       val wm = f"2024-01-$wmDay%02d 00:00:00"
-      val got = Watermark(df, wm).get.collect().map(_.getLong(0)).toSet
+      val got = Watermark(df, wm).get._1.collect().map(_.getLong(0)).toSet
       val wmT = java.time.LocalDateTime.of(2024, 1, wmDay, 0, 0)
       val expect = rows.filter { r =>
         r.getAs[java.time.LocalDateTime](1).isAfter(wmT) ||
