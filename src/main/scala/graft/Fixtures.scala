@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,21 +25,93 @@ object Fixtures {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet schema per fixture path, inferred once per JVM. Metadata
-    * only (never data): every `spark.read.parquet` without an explicit
-    * schema re-reads a file footer on the DRIVER during analysis, and a
-    * bench session builds ~10⁴ fixture DataFrames — that footer I/O and
-    * per-call inference is pure per-query floor (guide §7.3: driver-side
-    * single-threaded work). Production pipelines pass explicit schemas
-    * for the same reason.
+  /** Parquet schema per fixture path, read once per JVM with
+    * [[parquetSchema]]. Metadata only (never data): a
+    * `spark.read.parquet` without an explicit schema infers it with a
+    * one-task Spark job, and a bench session builds ~10⁴ fixture
+    * DataFrames, so that inference is pure per-query floor (guide §7.3:
+    * driver-side single-threaded work). Production pipelines pass
+    * explicit schemas for the same reason.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
+  /** The schema `spark.read.parquet(path).schema` infers, read on the
+    * driver from one file footer with no Spark job.
+    *
+    * The file is the one Spark's non-merging inference reads
+    * (`ParquetUtils.inferSchema`): `_common_metadata`, else `_metadata`,
+    * else the first data file by path, skipping the names Spark's file
+    * listing hides (a leading `.`, or a leading `_` other than the two
+    * summary files, or a `._COPYING_` suffix). A bare file path is its
+    * own file. Spark's row-metadata key wins over the Parquet schema
+    * when present; otherwise the footer is converted under the
+    * session's conf (`nanosAsLong`, `inferTimestampNTZ`, binary as
+    * string), and every field is made nullable as Spark does for a
+    * file source.
+    *
+    * An empty directory, or one with subdirectories (a partitioned
+    * layout, whose partition columns only Spark's inference adds),
+    * fails with the path in the message.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val status = fs.getFileStatus(root)
+    val file =
+      if (!status.isDirectory) status
+      else {
+        val (dirs, files) = fs.listStatus(root).toSeq
+          .filterNot(s => hiddenName(s.getPath.getName))
+          .sortBy(_.getPath.toString)
+          .partition(_.isDirectory)
+        if (dirs.nonEmpty)
+          throw new IllegalArgumentException(s"$path has subdirectories " +
+            s"(${dirs.map(_.getPath.getName).mkString(", ")}); a " +
+            "partitioned Parquet layout has no single-footer schema")
+        def named(n: String) = files.find(_.getPath.getName == n)
+        named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+          .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+          .orElse(files.find(f => !summaryName(f.getPath.getName)))
+          .getOrElse(throw new IllegalArgumentException(
+            s"$path has no Parquet data file to read a schema from"))
+      }
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val footer = try reader.getFooter finally reader.close()
+    nullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      .asInstanceOf[StructType]
+  }
+
+  private def summaryName(n: String): Boolean =
+    n == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE ||
+      n == ParquetFileWriter.PARQUET_METADATA_FILE
+
+  /** Spark's listing filter (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def hiddenName(n: String): Boolean =
+    ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_")) &&
+      !(n.startsWith("_common_metadata") || n.startsWith("_metadata"))
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+    case other => other
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val sch = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val sch = schemaCache.computeIfAbsent(path, parquetSchema(spark, _))
     val df = spark.read.schema(sch).parquet(path)
     if (name == "events" && df.schema("ts").dataType == LongType) {
       // ns → us integer floor division (values are all positive; `/` would

@@ -77,17 +77,29 @@ final class FileCheckpointStore(path: Path) extends CheckpointStore {
     if (Files.exists(path)) CheckpointState.fromJson(Files.readString(path))
     else CheckpointState.seed
 
-  /** Writes a dot-prefixed temp file beside the checkpoint, then renames
-    * it over the checkpoint atomically: a reader sees the old document or
-    * the new one, never a truncated one. A crash before the rename leaves
-    * the temp file, which [[read]] ignores.
+  /** Replaces the document atomically ([[AtomicFile.write]]); the temp
+    * file a crash before the rename leaves is one [[read]] ignores.
     */
-  override def write(st: CheckpointState): Unit = {
+  override def write(st: CheckpointState): Unit =
+    AtomicFile.write(path, st.toJson)
+}
+
+/** Whole-document writes for the run's small driver-side files (the
+  * checkpoint, the schema dump, the export manifest).
+  */
+private[etl] object AtomicFile {
+
+  /** Writes a dot-prefixed temp file beside `path`, then renames it over
+    * `path` atomically: a reader sees the old document or the new one,
+    * never a truncated one. A crash before the rename leaves only the
+    * dot-prefixed temp file.
+    */
+  def write(path: Path, content: String): Unit = {
     val dir = path.toAbsolutePath.getParent
     Files.createDirectories(dir)
     val tmp = Files.createTempFile(dir, s".${path.getFileName}.", ".tmp")
     try {
-      Files.writeString(tmp, st.toJson)
+      Files.writeString(tmp, content)
       Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE): Unit
     } finally Files.deleteIfExists(tmp): Unit
   }

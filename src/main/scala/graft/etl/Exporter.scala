@@ -1,5 +1,8 @@
 package graft.etl
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import java.nio.file.{Files, Paths}
+
 /** The data-export run loop — the reference's `db_extractor`
   * (db_extractor_full.py:426-563): discover tables, sanitize names, drop
   * the ignore list, route each table through the watermark dispatch, write
@@ -16,7 +19,12 @@ package graft.etl
   *    individual tables failed (errors swallowed per-worker, :418-421),
   *    losing those tables' missed window. We gate on all-success by
   *    default; `advanceOnPartialFailure = true` restores the reference
-  *    behavior.
+  *    behavior;
+  *  - DEVIATION: once the checkpoint has advanced, the run writes the
+  *    prefix's [[ManifestName]], and a later run whose checkpoint points
+  *    at a prefix that has one fails instead of overwriting it (the
+  *    reference would silently overwrite after a lost or reset
+  *    checkpoint).
   *
   * Per table, [[Watermark]] filters and names the order column, and the
   * sink delivers that order. The JSON-array sink costs one Spark job per
@@ -76,12 +84,40 @@ object Exporter {
   final case class RunResult(
       serial: Long,
       watermark: String,
+      runTime: String,
       outcomes: Seq[TableOutcome],
       checkpointAdvanced: Boolean,
       memoryLog: String) {
     def exported: Seq[Exported] =
       outcomes.collect { case e: Exported => e }
+
+    /** The [[ManifestName]] document: serial, watermark, run time and one
+      * entry per table outcome, in outcome order.
+      */
+    def manifestJson: String = {
+      val m = new ObjectMapper()
+      val root = m.createObjectNode()
+      root.put("serial", serial)
+      root.put("watermark", watermark)
+      root.put("runTime", runTime)
+      val tables = root.putArray("tables")
+      outcomes.foreach { o =>
+        val (table, outcome, key, value) = o match {
+          case Exported(t, p) => (t, "exported", "path", p)
+          case Skipped(t, r) => (t, "skipped", "reason", r)
+          case Failed(t, e) => (t, "failed", "error", e)
+        }
+        tables.addObject().put("table", table).put("outcome", outcome)
+          .put(key, value): Unit
+      }
+      m.writeValueAsString(root)
+    }
   }
+
+  /** Written into a serial prefix after the checkpoint has advanced past
+    * it, so its presence marks the prefix as a completed export.
+    */
+  val ManifestName = "_manifest.json"
 
   /** X7 memory telemetry (reference db_extractor_full.py:53-58, which
     * prints `ru_maxrss` after each run): the driver process's peak RSS
@@ -121,6 +157,14 @@ object Exporter {
     val st = store.read()
     val serial = st.dataSerial + 1
     val prefix = f"$outDir/db_data/$serial%06d"
+    // A prefix without a manifest is a retry after a partial failure (the
+    // checkpoint did not advance) and is reused; one with a manifest was
+    // completed by an earlier run, so the checkpoint is behind it.
+    val manifest = Paths.get(prefix, ManifestName)
+    if (Files.exists(manifest))
+      throw new IllegalStateException(s"$manifest exists: serial $serial " +
+        s"is a completed export, but the checkpoint's data serial is " +
+        s"${st.dataSerial}; refusing to overwrite it")
 
     // DEVIATION (flagged, SURVEY.md §1.4): the reference reads via the
     // SANITIZED name (db_extractor_full.py:377 interpolates it into
@@ -187,10 +231,14 @@ object Exporter {
 
     val ok = !outcomes.exists(_.isInstanceOf[Failed])
     val advance = ok || advanceOnPartialFailure
-    if (advance)
-      store.write(st.copy(lastRunTime = runTime, dataSerial = serial))
     val memLog = memoryLogLine()
+    val result =
+      RunResult(serial, st.lastRunTime, runTime, outcomes, advance, memLog)
+    if (advance) {
+      store.write(st.copy(lastRunTime = runTime, dataSerial = serial))
+      AtomicFile.write(manifest, result.manifestJson)
+    }
     println(memLog)
-    RunResult(serial, st.lastRunTime, outcomes, advance, memLog)
+    result
   }
 }

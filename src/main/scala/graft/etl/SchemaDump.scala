@@ -49,6 +49,12 @@ object SchemaDump {
   /** Run the gated export: write `<outDir>/<%06d>_db_schema.json` iff the
     * document hash changed; advance the schema serial + hash in the
     * checkpoint (db_schema_dump.py:66-95).
+    *
+    * A serial file that already exists is never overwritten. With the
+    * same content it is a retry of a run whose checkpoint write did not
+    * land, and only the checkpoint advances; with other content the
+    * checkpoint is behind an earlier dump (e.g. restarted numbering) and
+    * the run fails.
     */
   def run(source: TableSource, outDir: String, store: CheckpointStore,
       ignore: Set[String] = Exporter.SchemaIgnore): Result = {
@@ -59,8 +65,11 @@ object SchemaDump {
     else {
       val serial = st.schemaSerial + 1
       val path = Paths.get(outDir, f"$serial%06d" + "_db_schema.json")
-      Files.createDirectories(path.getParent)
-      Files.writeString(path, doc)
+      if (!Files.exists(path)) AtomicFile.write(path, doc)
+      else if (Files.readString(path) != doc)
+        throw new IllegalStateException(s"$path already holds a different " +
+          s"schema dump, but the checkpoint's schema serial is " +
+          s"${st.schemaSerial}: refusing to overwrite it")
       store.write(st.copy(schemaSerial = serial, lastMD5Hash = hash))
       Result(changed = true, hash, Some(path.toString))
     }

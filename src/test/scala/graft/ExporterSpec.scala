@@ -399,6 +399,72 @@ class ExporterSpec extends SparkSpec {
       == CheckpointState.seed)
   }
 
+  test("an advancing run writes the serial's manifest after the " +
+    "checkpoint; a failed run writes none") {
+    val boom = new TableSource {
+      override def tableNames: Seq[String] = Seq("codes", "bad", "ledger")
+      override def read(table: String) =
+        if (table == "bad") throw new RuntimeException("no such table")
+        else fixtureSource.read(table)
+    }
+    val out = tmpDir("manifest")
+    val store = FileCheckpointStore(s"$out/ckpt.json")
+    val manifest = Paths.get(s"$out/db_data/000001/_manifest.json")
+    Exporter.run(boom, out, store, runTime = "2024-01-01 00:00:00")
+    assert(!Files.exists(manifest))
+    val r = Exporter.run(boom, out, store, advanceOnPartialFailure = true,
+      runTime = "2024-01-02 00:00:00")
+    assert(r.runTime == "2024-01-02 00:00:00")
+    assert(Files.readString(manifest) ==
+      """{"serial":1,"watermark":"1970-01-01 00:00:00",""" +
+      """"runTime":"2024-01-02 00:00:00","tables":[""" +
+      s"""{"table":"codes","outcome":"exported",""" +
+      s""""path":"$out/db_data/000001/codes.json"},""" +
+      """{"table":"bad","outcome":"failed","error":"no such table"},""" +
+      """{"table":"ledger","outcome":"skipped",""" +
+      """"reason":"updated_at-only table (reference semantics)"}]}""")
+    assert(Files.readString(manifest) == r.manifestJson)
+  }
+
+  test("a restarted numbering fails loudly and leaves the completed " +
+    "serial byte-identical") {
+    val out = tmpDir("restart")
+    val store = FileCheckpointStore(s"$out/ckpt.json")
+    val r1 = GraftJob.run(fixtureSource, out, store)
+    assert(r1.schema.exists(_.changed) && r1.data.exists(_.checkpointAdvanced))
+    val manifest = Paths.get(s"$out/db_data/000001/_manifest.json")
+    assert(Files.exists(manifest))
+    def snapshot: Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.walk(Paths.get(out))
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .filterNot(_.getFileName.toString == "ckpt.json")
+        .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
+      finally s.close()
+    }
+    val before = snapshot
+    assert(before.keySet.exists(_.endsWith("000001_db_schema.json")))
+
+    // the checkpoint is lost and reseeded
+    store.write(CheckpointState.seed)
+    val e = intercept[IllegalStateException](Exporter.run(fixtureSource,
+      out, store, runTime = "2030-01-01 00:00:00"))
+    assert(e.getMessage.contains(manifest.toString), e.getMessage)
+    assert(store.read() == CheckpointState.seed)
+    // a different schema document under the same serial is refused
+    val e2 = intercept[IllegalStateException](
+      SchemaDump.run(fixtureSource, out, store, ignore = Set("codes")))
+    assert(e2.getMessage.contains("000001_db_schema.json"), e2.getMessage)
+    assert(store.read() == CheckpointState.seed)
+    // through the job: the identical schema dump is a retry that only
+    // advances the checkpoint; the data phase fails
+    val r2 = GraftJob.run(fixtureSource, out, store)
+    assert(r2.schema.exists(_.changed))
+    assert(r2.data.left.exists(_.contains(manifest.toString)), r2.data)
+    assert(store.read().schemaSerial == 1L && store.read().dataSerial == 0L)
+    assert(snapshot == before)
+  }
+
   test("parquet sink mode: sharded columnar output, same routing") {
     val out = tmpDir("pq")
     val store = FileCheckpointStore(s"$out/ckpt.json")
